@@ -135,12 +135,13 @@ def main() -> int:
     # wall time scales ~1/cores; it lives in the DETAIL sidecar +
     # stderr only — never in the stdout "queries"/"value", which stay
     # byte-compatible round-over-round.
+    # read before the probe, which saturates every core
+    load_after = os.getloadavg()
     probe_runs = []
     for _ in range(3):
         t0 = time.perf_counter()
         spark.range(1 << 30).selectExpr("sum(xxhash64(id, id + 1))").collect()
         probe_runs.append(round(time.perf_counter() - t0, 3))
-    load_after = os.getloadavg()
 
     # Compact machine line: headline + per-query medians only.  Detail
     # (minima, loadavg, secondary SF) goes to the sidecar + stderr so the

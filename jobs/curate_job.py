@@ -42,6 +42,7 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import SparkSession
 
+    from ssafynews_data_spark.caching import release_pins
     from ssafynews_data_spark.plans.curate import curate
     from ssafynews_data_spark.plans.pipeline import curate_full
     from ssafynews_data_spark.sources.readers import _ensure_session_conf
@@ -50,17 +51,20 @@ def main(argv: list[str] | None = None) -> int:
     spark = SparkSession.builder.appName("curate_corpus").getOrCreate()
     _ensure_session_conf(spark)
 
-    docs = spark.read.parquet(args.input)
-    curated = curate_full(docs) if args.full else curate(docs)
-    for split in ("train", "test"):
-        write_training_shards(
-            curated.filter(curated["split"] == split).drop("split"),
-            os.path.join(args.output, split),
-            n_shards=args.shards,
-            shard_key="doc_id",
-            sort_col="doc_id",
-        )
-    return 0
+    try:
+        docs = spark.read.parquet(args.input)
+        curated = curate_full(docs) if args.full else curate(docs)
+        for split in ("train", "test"):
+            write_training_shards(
+                curated.filter(curated["split"] == split).drop("split"),
+                os.path.join(args.output, split),
+                n_shards=args.shards,
+                shard_key="doc_id",
+                sort_col="doc_id",
+            )
+        return 0
+    finally:
+        release_pins()
 
 
 if __name__ == "__main__":

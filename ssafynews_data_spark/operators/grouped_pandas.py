@@ -23,22 +23,21 @@ _OUT_SCHEMA = "event_id long, event_type string, z_q4 long"
 def _zscore_group(pdf: pd.DataFrame) -> pd.DataFrame:
     import math
 
-    # match SQL avg/stddev_samp exactly: plain sequential formulas, not
-    # pandas' pairwise-summation .mean()/.std()
-    v = pdf["value"].to_numpy()
+    import numpy as np
+
+    # match SQL avg/stddev_samp exactly: exactly rounded sums (fsum) in
+    # the two-pass formulas, not pandas' pairwise-summation .mean()/.std()
+    v = pdf["value"].to_numpy(dtype=np.float64)
     n = len(v)
     mean = math.fsum(v) / n if n else 0.0
-    if n > 1:
-        var = math.fsum((x - mean) ** 2 for x in v) / (n - 1)
-        std = math.sqrt(var)
-    else:
-        std = 0.0
-    z = [(x - mean) / std if std > 0 else 0.0 for x in v]
+    d = v - mean
+    std = math.sqrt(math.fsum(d * d) / (n - 1)) if n > 1 else 0.0
+    z = d / std if std > 0 else np.zeros(n)
     return pd.DataFrame(
         {
             "event_id": pdf["event_id"],
             "event_type": pdf["event_type"],
-            "z_q4": [math.floor(x * 10000) for x in z],
+            "z_q4": np.floor(z * 10000).astype(np.int64),
         }
     )
 

@@ -49,6 +49,7 @@ results (order-preserving accumulation).
 
 from __future__ import annotations
 
+import math
 import os
 
 import numpy as np
@@ -163,26 +164,32 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_topk_rounded(_corpus(spark, sf_dir))
 
 
+def _exact_sims(corpus: DataFrame) -> DataFrame:
+    """Unrounded cosine of every (query, corpus row) pair, query rows
+    being ``vec_id < N_QUERIES`` broadcast against the corpus.  Each
+    row's norm is computed once, before the join (``n_e``; the queries
+    carry theirs as ``n_q``), so a pair costs one dot-product fold
+    instead of three; ``dot / (n_q * n_e)`` is the same tree as
+    :func:`cosine`, so every double is unchanged."""
+    normed = corpus.selectExpr("vec_id", "emb", f"sqrt({_dot_sql('emb', 'emb')}) AS n_e")
+    queries = normed.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"),
+        F.col("n_e").alias("n_q"),
+    )
+    return normed.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id")).selectExpr(
+        "query_id",
+        "vec_id AS neighbor_id",
+        f"{_dot_sql('q_emb', 'emb')} / (n_q * n_e) AS sim",
+    )
+
+
 def _exact_topk_rounded(corpus: DataFrame) -> DataFrame:
     """``cosine_topk``'s exact body over an arbitrary (vec_id, emb)
     frame — factored so the serving contracts that already hold the
     PINNED corpus reuse it for their exact-baseline leg instead of
     re-scanning parquet and re-running the cast lineage (guide §2.4;
-    the ``_ivf_fresh_topk`` pattern).  Expressions are identical to the
-    pre-factoring ``cosine_topk`` — same rounding, same tie-breaks."""
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    sims = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        # one parsed string instead of the Column-API cosine tree
-        # (same expressions — see _cosine_sql)
-        .selectExpr(
-            "query_id",
-            "vec_id AS neighbor_id",
-            f"{_cosine_sql('q_emb', 'emb')} AS sim",
-        )
-    )
+    the ``_ivf_fresh_topk`` pattern)."""
+    sims = _exact_sims(corpus)
     w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (
         sims.withColumn("rank", F.row_number().over(w))
@@ -3013,13 +3020,28 @@ def _sq8_lit(arr: "np.ndarray") -> Column:
     return F.array(*[F.lit(float(v)) for v in arr])
 
 
+class NonFiniteLiteralError(ValueError):
+    """A NaN or infinite value reached a SQL array literal: SQL has no
+    literal for it, and a non-finite bound, centroid or range means the
+    corpus it was derived from holds non-finite embeddings."""
+
+
 def _arr_sql(arr) -> str:
     """A double array literal as SQL text.  ``repr`` round-trips every
     finite double exactly (and Spark's parser, like Java's
     ``parseDouble``, is correctly rounded), so the parsed literal holds
     the same bits ``F.lit(float(v))`` would — one parse instead of one
-    py4j call per element (guide §7.3)."""
-    return "array(" + ", ".join(f"{float(v)!r}D" for v in arr) + ")"
+    py4j call per element (guide §7.3).  Raises
+    :class:`NonFiniteLiteralError` on NaN or ±inf."""
+    vals = [float(v) for v in arr]
+    bad = [i for i, v in enumerate(vals) if not math.isfinite(v)]
+    if bad:
+        raise NonFiniteLiteralError(
+            f"non-finite value {vals[bad[0]]} at index {bad[0]} of a {len(vals)}-element"
+            f" array literal ({len(bad)} non-finite in all); check the corpus for"
+            f" NaN/Inf embeddings"
+        )
+    return "array(" + ", ".join(f"{v!r}D" for v in vals) + ")"
 
 
 def _arr2_sql(mat) -> str:

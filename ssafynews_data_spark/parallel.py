@@ -46,18 +46,19 @@ def _inheritable(thunks: Sequence[Callable[[], Any]]) -> Sequence[Callable[[], A
     """Wrap thunks so JVM thread-locals (job description/group, tags)
     carry into the pool threads under pinned-thread mode.  Falls back
     to the bare thunks when no classic session is active (unit tests
-    that exercise run_parallel without Spark)."""
+    that exercise run_parallel without Spark) or pyspark lacks the
+    recipe; any other failure to wrap propagates, so a lost tag
+    inheritance never goes unnoticed."""
     try:
         from pyspark import inheritable_thread_target
         from pyspark.sql import SparkSession
-
-        session = SparkSession.getActiveSession()
-        if session is None:
-            return thunks
-        wrap = inheritable_thread_target(session)
-        return [wrap(t) for t in thunks]
-    except Exception:
+    except ImportError:
         return thunks
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return thunks
+    wrap = inheritable_thread_target(session)
+    return [wrap(t) for t in thunks]
 
 
 def run_parallel(*thunks: Callable[[], Any]) -> Sequence[Any]:

@@ -15,6 +15,9 @@ both are disqualifying at 100 TB.  The engine's rules:
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -47,8 +50,75 @@ def _ensure_session_conf(spark: SparkSession) -> None:
             pass
 
 
+#: most tables kept resolved at once, over all sessions (least recently
+#: used goes first)
+TABLE_MEMO_MAX = 64
+
+_MEMO: OrderedDict[tuple[str, str], tuple[tuple, DataFrame]] = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+
+
+def _file_identity(path: str) -> tuple:
+    """What changes when a table's files change: inode, mtime and size of
+    ``path`` and, for a directory, the relative name, mtime and size of
+    every entry below it.  Raises ``OSError`` for a path the local file
+    system cannot see."""
+    st = os.stat(path)
+    ident = [(st.st_ino, st.st_mtime_ns, st.st_size)]
+    if stat.S_ISDIR(st.st_mode):
+        stack = [(path, "")]
+        while stack:
+            d, rel = stack.pop()
+            with os.scandir(d) as it:
+                for e in sorted(it, key=lambda e: e.name):
+                    est = e.stat()
+                    ident.append((rel + e.name, est.st_mtime_ns, est.st_size))
+                    if stat.S_ISDIR(est.st_mode):
+                        stack.append((e.path, rel + e.name + "/"))
+    return tuple(ident)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table. Parquet scan — pushdown/pruning are free.
+    """One testdata table, resolved once per session and file version.
+
+    The finished DataFrame of :func:`_read_table` is lazy — plan and
+    metadata, never rows — so it is kept per (Spark session, absolute
+    path) together with the path's :func:`_file_identity`, and handed
+    out again while that identity holds.  A rewritten file, a file
+    added to or removed from a directory table, or another session
+    (``spark.newSession()``) resolves afresh.  At most
+    ``TABLE_MEMO_MAX`` tables are kept; the memo is safe to use from
+    ``run_parallel`` threads.  Paths the local file system cannot stat
+    (remote stores, missing tables) are read without it.  Two calls
+    return the same frame, so a self-join of one table aliases its
+    sides, as any self-join of one DataFrame must.
+    """
+    _ensure_session_conf(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    jsession = getattr(spark, "_jsparkSession", None)
+    try:
+        ident = _file_identity(path)
+    except OSError:
+        ident = None
+    if jsession is None or ident is None:
+        return _read_table(spark, path, name)
+    key = (jsession.sessionUUID(), os.path.abspath(path))
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+        if hit is not None and hit[0] == ident:
+            _MEMO.move_to_end(key)
+            return hit[1]
+    df = _read_table(spark, path, name)
+    with _MEMO_LOCK:
+        _MEMO[key] = (ident, df)
+        _MEMO.move_to_end(key)
+        while len(_MEMO) > TABLE_MEMO_MAX:
+            _MEMO.popitem(last=False)
+    return df
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """Read one testdata table. Parquet scan — pushdown/pruning are free.
 
     Timestamp columns are normalized to session-TZ ``TIMESTAMP`` whatever
     the fixture's physical encoding is:
@@ -62,10 +132,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       DuckDB (UTC-naive) sees.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    _ensure_session_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     for field in df.schema.fields:
         want = TESTDATA_SCHEMAS.get(name, T.StructType([]))
         want_field = next((f for f in want.fields if f.name == field.name), None)

@@ -12,6 +12,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
 
 import daily_report_job  # noqa: E402
 
+from ssafynews_data_spark.caching import live_pins  # noqa: E402
 from tests.test_plans import _articles  # noqa: E402
 
 
@@ -23,6 +24,7 @@ def test_job_end_to_end(spark, tmp_path):
         ["--date", "2025-05-24", "--input", src, "--output", out]
     )
     assert rc == 0
+    assert live_pins() == 0  # the job released its cache pins
     cats = spark.read.parquet(os.path.join(out, "category_counts"))
     assert cats.count() == 3
     top = spark.read.parquet(os.path.join(out, "top10_keywords"))
@@ -41,6 +43,7 @@ def test_job_empty_day(spark, tmp_path):
     _articles(spark).write.parquet(src)
     rc = daily_report_job.main(["--date", "1999-01-01", "--input", src, "--output", out])
     assert rc == 0
+    assert live_pins() == 0  # the job released its cache pins
     summary = spark.read.parquet(os.path.join(out, "summary")).collect()[0]
     assert summary.n == 0
     assert not os.path.exists(os.path.join(out, "category_counts"))
@@ -59,6 +62,7 @@ def test_curate_job_end_to_end(spark, sf_dir, tmp_path):
         ["--input", f"{sf_dir}/documents.parquet", "--output", out, "--shards", "3"]
     )
     assert rc == 0
+    assert live_pins() == 0  # the job released its cache pins
     train = spark.read.parquet(out + "/train")
     test = spark.read.parquet(out + "/test")
     assert len(glob.glob(out + "/train/part-*.parquet")) == 3
@@ -94,6 +98,7 @@ def test_curate_job_full_chain(spark, sf_dir, tmp_path):
         ]
     )
     assert rc == 0
+    assert live_pins() == 0  # the job released its cache pins
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     want = {
         (r.doc_id, r.split)

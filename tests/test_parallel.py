@@ -68,3 +68,19 @@ def test_thunks_overlap_in_time():
     run_parallel(lambda: thunk("a"), lambda: thunk("b"))
     (a0, a1), (b0, b1) = spans["a"], spans["b"]
     assert max(a0, b0) < min(a1, b1), f"no overlap: a={spans['a']} b={spans['b']}"
+
+
+def test_unexpected_wrap_failure_propagates(monkeypatch):
+    """Only a pyspark without the inheritable-thread recipe falls back
+    to bare thunks; any other failure to wrap surfaces instead of
+    silently dropping job-tag inheritance."""
+    import pyspark
+    from pyspark.sql import SparkSession
+
+    def broken(session):
+        raise RuntimeError("wrapper API changed")
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", broken)
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: object()))
+    with pytest.raises(RuntimeError, match="wrapper API changed"):
+        run_parallel(lambda: 1, lambda: 2)

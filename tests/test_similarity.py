@@ -805,3 +805,58 @@ def test_sq8_sql_twins_match_column_forms(spark):
         f"{similarity._arr2_sql(mat)} AS m"
     ).collect()[0].m
     assert [list(r) for r in lit_col] == [list(r) for r in lit_sql]
+
+
+def test_exact_sims_match_sequential_fold_reference(spark, sf_dir):
+    """The unrounded cosine of every (query, row) pair equals a plain
+    Python left fold of the products (the order Spark's ``aggregate``
+    folds in), divided by the product of the two norms — exact ==."""
+    import math
+
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
+    vecs = {
+        int(i): [float(x) for x in e]
+        for i, e in zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist())
+    }
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    norm = {i: math.sqrt(fold(v, v)) for i, v in vecs.items()}
+    got = {
+        (r.query_id, r.neighbor_id): r.sim
+        for r in similarity._exact_sims(similarity._corpus(spark, sf_dir)).collect()
+    }
+    want = {
+        (q, i): fold(vecs[q], v) / (norm[q] * norm[i])
+        for q in vecs
+        if q < similarity.N_QUERIES
+        for i, v in vecs.items()
+        if i != q
+    }
+    assert got.keys() == want.keys()
+    assert [k for k in want if got[k] != want[k]] == []
+
+
+def test_array_literals_reject_non_finite_values():
+    """NaN/Inf have no SQL literal: the literal builders raise a named
+    error instead of emitting text that fails to parse."""
+    import numpy as np
+    import pytest
+
+    ok = np.array([0.0, -1.5, 2.0])
+    assert similarity._arr_sql(ok) == "array(0.0D, -1.5D, 2.0D)"
+    for bad in (np.nan, np.inf, -np.inf):
+        vec = np.array([0.0, bad, 2.0])
+        with pytest.raises(similarity.NonFiniteLiteralError, match="index 1"):
+            similarity._arr_sql(vec)
+        with pytest.raises(similarity.NonFiniteLiteralError):
+            similarity._arr2_sql(np.stack([ok, vec]))
+        with pytest.raises(similarity.NonFiniteLiteralError):
+            similarity._sq8_encode_sql(ok, vec)
+    assert issubclass(similarity.NonFiniteLiteralError, ValueError)

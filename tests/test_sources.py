@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ssafynews_data_spark.schemas import ARTICLE_RAW_CSV, ARTICLE_WIRE
@@ -411,3 +412,169 @@ def test_feed_source_pushes_author_filter(spark):
     full = FeedReader({"feeds": "14"})
     list(full.pushFilters([]))
     assert len(full.partitions()) == 14
+
+
+# -- load_table memo -----------------------------------------------------------
+
+
+def _write_table(path, n: int, extra: bool = False) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {"event_id": pa.array(range(n), pa.int64())}
+    if extra:
+        cols["score"] = pa.array([float(i) for i in range(n)])
+    pq.write_table(pa.table(cols), str(path))
+
+
+@pytest.fixture
+def reads(monkeypatch):
+    """Count the tables load_table actually resolves (memo misses)."""
+    from ssafynews_data_spark.sources import readers
+
+    calls = []
+    real = readers._read_table
+
+    def spy(spark, path, name):
+        calls.append(path)
+        return real(spark, path, name)
+
+    monkeypatch.setattr(readers, "_read_table", spy)
+    return calls
+
+
+def test_load_table_second_call_is_a_hit(spark, tmp_path, reads):
+    from ssafynews_data_spark.sources.readers import load_table
+
+    _write_table(tmp_path / "t.parquet", 4)
+    a = load_table(spark, str(tmp_path), "t")
+    b = load_table(spark, str(tmp_path), "t")
+    assert b is a and len(reads) == 1
+    assert sorted(r.event_id for r in b.collect()) == [0, 1, 2, 3]
+
+
+def test_load_table_sees_file_rewritten_in_place(spark, tmp_path, reads):
+    from ssafynews_data_spark.sources.readers import load_table
+
+    _write_table(tmp_path / "t.parquet", 3)
+    assert load_table(spark, str(tmp_path), "t").count() == 3
+    _write_table(tmp_path / "t.parquet", 5, extra=True)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["event_id", "score"] and df.count() == 5
+    assert len(reads) == 2
+
+
+def test_load_table_sees_file_added_to_directory_table(spark, tmp_path, reads):
+    from ssafynews_data_spark.sources.readers import load_table
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    _write_table(d / "part-0.parquet", 3)
+    assert load_table(spark, str(tmp_path), "t").count() == 3
+    assert load_table(spark, str(tmp_path), "t").count() == 3
+    _write_table(d / "part-1.parquet", 2)
+    assert load_table(spark, str(tmp_path), "t").count() == 5
+    assert len(reads) == 2
+
+
+def test_load_table_new_session_gets_its_own_entry(spark, tmp_path, reads):
+    from ssafynews_data_spark.sources.readers import load_table
+
+    _write_table(tmp_path / "t.parquet", 2)
+    other = spark.newSession()
+    a = load_table(spark, str(tmp_path), "t")
+    b = load_table(other, str(tmp_path), "t")
+    assert b is not a and len(reads) == 2
+    assert b.sparkSession._jsparkSession.sessionUUID() == other._jsparkSession.sessionUUID()
+    assert load_table(other, str(tmp_path), "t") is b and len(reads) == 2
+    assert b.count() == 2
+
+
+def test_load_table_memo_bound_evicts_oldest(spark, tmp_path, reads, monkeypatch):
+    from ssafynews_data_spark.sources import readers
+
+    monkeypatch.setattr(readers, "TABLE_MEMO_MAX", 2)
+    for name in ("a", "b", "c"):
+        _write_table(tmp_path / f"{name}.parquet", 1)
+        readers.load_table(spark, str(tmp_path), name)
+    assert len(readers._MEMO) == 2 and len(reads) == 3
+    readers.load_table(spark, str(tmp_path), "c")  # newest: still kept
+    assert len(reads) == 3
+    readers.load_table(spark, str(tmp_path), "a")  # oldest: evicted
+    assert len(reads) == 4 and len(readers._MEMO) == 2
+
+
+def test_load_table_concurrent_calls_through_run_parallel(spark, tmp_path, reads):
+    from ssafynews_data_spark.parallel import run_parallel
+    from ssafynews_data_spark.sources.readers import load_table
+
+    sizes = {"a": 2, "b": 3, "c": 4}
+    for name, n in sizes.items():
+        _write_table(tmp_path / f"{name}.parquet", n)
+    names = list(sizes) * 3
+    counts = run_parallel(
+        *[lambda n=n: load_table(spark, str(tmp_path), n).count() for n in names]
+    )
+    assert list(counts) == [sizes[n] for n in names]
+    misses = len(reads)
+    for name in sizes:
+        load_table(spark, str(tmp_path), name)
+    assert len(reads) == misses  # every table is memoized afterwards
+
+
+def test_load_table_missing_table_raises_spark_error(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from ssafynews_data_spark.sources.readers import load_table
+
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path), "absent")
+
+
+def test_load_table_memo_thread_stress(tmp_path, monkeypatch):
+    """More threads than cores hammer a small memo with a short switch
+    interval: every call gets its own table, and the memo never holds
+    more than its bound (a lost update would break one or the other)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ssafynews_data_spark.sources import readers
+
+    class _JSession:
+        def sessionUUID(self):
+            return "stress-session"
+
+    class _Spark:
+        _jsparkSession = _JSession()
+
+        class conf:
+            @staticmethod
+            def set(key, value):
+                pass
+
+    names = [f"t{i}" for i in range(6)]
+    for name in names:
+        (tmp_path / f"{name}.parquet").write_bytes(b"x")
+    monkeypatch.setattr(readers, "TABLE_MEMO_MAX", 3)
+    monkeypatch.setattr(readers, "_read_table", lambda spark, path, name: (name, path))
+    monkeypatch.setattr(readers, "_MEMO", type(readers._MEMO)())
+    spark = _Spark()
+
+    def worker(k):
+        got = []
+        for j in range(300):
+            name = names[(k * 7 + j) % len(names)]
+            got.append(readers.load_table(spark, str(tmp_path), name)[0] == name)
+            with readers._MEMO_LOCK:
+                assert len(readers._MEMO) <= readers.TABLE_MEMO_MAX
+        return all(got)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            results = [f.result(timeout=60) for f in [pool.submit(worker, k) for k in range(16)]]
+    finally:
+        sys.setswitchinterval(old)
+    assert results == [True] * 16
+    assert len(readers._MEMO) <= readers.TABLE_MEMO_MAX
